@@ -68,52 +68,38 @@ def test_curation_packed_encoding_domain_guards_raise(spark, sf_dir):
 
 
 def test_ann_sideload_kernel_matches_join_kernel(spark, sf_dir):
-    """r14 change 2: the side-loaded ANN scoring kernel (ids-only Arrow
-    crossing + per-task parquet vector load) must be BIT-identical to
-    the join-attached kernel on the full bench corpus — both paths stay
-    live (the guard falls back to the join beyond _SIDELOAD_CAP), so
-    equivalence is pinned value-for-value."""
-    from pyspark.sql import functions as F
-
-    from xml_hive_spark.operators import payload_side, table_rows
+    """r14 change 2: the verify kernel fed by the side-loaded vector
+    source (ids-only Arrow crossing + per-task parquet vector load) must
+    be BIT-identical to the same kernel fed by the attach source on the
+    full corpus — both sources stay live (the attach source takes over
+    beyond _SIDELOAD_CAP), so equivalence is pinned value-for-value."""
+    from xml_hive_spark.operators import table_rows
     from xml_hive_spark.operators import similarity as S
 
     emb = t(spark, sf_dir, "embeddings")
     n = table_rows(spark, sf_dir, "embeddings")
+    path = f"{sf_dir}/embeddings.parquet"
+    side = S._vector_source(n, path, "vec_id", "embedding")
+    assert isinstance(side, S._SideloadedVectors)  # the registry's source
+    attach = S._AttachedVectors()
     r = min(30, max(5, (n // 64).bit_length() - 1))
     sigs = (
         S.banded_signatures(emb, "vec_id", "embedding",
                             bands=16, rows_per_band=r)
         .select("id", "sig").persist()
     )
-    cand = sigs.select("id", F.posexplode("sig").alias("band", "bucket"))
-    a = cand.select("band", "bucket", F.col("id").alias("qid"))
-    b = cand.select("band", "bucket", F.col("id").alias("nid"))
-    uniq = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("qid") < F.col("nid"))
-        .select("qid", "nid").distinct()
-    )
-    vecs = payload_side(emb.select("vec_id", "embedding"), n * 600)
-    joined = uniq.join(
-        vecs.select(F.col("vec_id").alias("qid"),
-                    F.col("embedding").alias("qe")), "qid"
-    ).join(
-        vecs.select(F.col("vec_id").alias("nid"),
-                    F.col("embedding").alias("ne")), "nid"
-    )
-    old = S.cosine_partial_topk(joined, 5, symmetric=True)
-    new = S.cosine_partial_topk_sideload(
-        uniq, 5, f"{sf_dir}/embeddings.parquet", symmetric=True
-    )
+    uniq = S._band_candidates(sigs, "qid", "nid")
+    vecs = emb.select("vec_id", "embedding")
+    old = S._cosine_verify(attach.attach(uniq, vecs, n), attach, k=5)
+    new = S._cosine_verify(side.attach(uniq, vecs, n), side, k=5)
+
     # partial top-k is partition-dependent; compare after the same
-    # deterministic global cut both callers apply
+    # deterministic global cut the caller applies
     def cut(df):
-        from pyspark.sql import Window
-        w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), "nid")
+        w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "nid")
         return (df.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= 5)
-                .select("qid", "nid", F.round("adc", 4), "rank"))
+                .select("qid", "nid", F.round("cos_sim", 4), "rank"))
     assert sorted(map(tuple, cut(old).collect())) == sorted(
         map(tuple, cut(new).collect())
     )
@@ -131,9 +117,10 @@ def test_ann_join_ships_ids_only_into_arrow(spark, sf_dir):
 
 
 def test_embedding_cosine_sideload_matches_attach(spark, sf_dir):
-    """r14 change 3: dedup_embedding_cosine's side-loaded verify must be
-    value-identical to the attach-join formulation (vec_path=None keeps
-    the old path live for synthetic inputs and the over-cap regime)."""
+    """r14 change 3: dedup_embedding_cosine's verify fed by the
+    side-loaded vector source must be value-identical to the attach
+    source (vec_path=None selects it, as for synthetic inputs and the
+    over-cap regime)."""
     from xml_hive_spark.operators import table_rows
     from xml_hive_spark.operators.similarity import embedding_cosine_pairs
 

@@ -3,6 +3,8 @@ and LSH recall measured against the brute-force baseline on real data."""
 
 from __future__ import annotations
 
+import pytest
+
 from xml_hive_spark.operators import all_queries
 
 
@@ -233,6 +235,52 @@ class TestEmbeddingDedupLSH:
         # dense regime on the same plan: output superlinear (≈ quadratic;
         # cross-copy noise cosines exceed 0.25 at ~2σ rate)
         assert counts["dense3"] > 5 * counts["dense1"]
+
+
+_REDUCERS = [pytest.param({"threshold": -2.0}, id="theta"),
+             pytest.param({"k": 5}, id="topk")]
+
+
+class TestCosineVerify:
+    """The verify kernel fails loudly on vectors it cannot score
+    correctly, under both reducers, instead of scoring wrong values."""
+
+    @pytest.mark.parametrize("reducer", _REDUCERS)
+    def test_sideload_missing_id_raises(self, spark, tmp_path, reducer):
+        """Id 1 is absent from the vector table: searchsorted lands it
+        on id 2's row, which must raise rather than score id 2's
+        vector."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from xml_hive_spark.operators.similarity import (
+            _cosine_verify, _SideloadedVectors)
+
+        path = str(tmp_path / "vecs.parquet")
+        pq.write_table(pa.table({
+            "vec_id": pa.array([0, 2], pa.int64()),
+            "embedding": pa.array([[1.0] * 64, [0.5] * 64],
+                                  pa.list_(pa.float32())),
+        }), path)
+        pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+        vectors = _SideloadedVectors(path, "vec_id", "embedding")
+        with pytest.raises(Exception, match="missing from the side-loaded"):
+            _cosine_verify(pairs, vectors, **reducer).collect()
+
+    @pytest.mark.parametrize("reducer", _REDUCERS)
+    def test_attach_ragged_vectors_raise(self, spark, reducer):
+        """One Arrow batch whose rows hold 63 and 65 values: the total
+        is a multiple of 64, so a reshape of the flattened values would
+        silently split them across the row boundary."""
+        from xml_hive_spark.operators.similarity import (
+            _AttachedVectors, _cosine_verify)
+
+        rows = [(0, 1, [1.0] * 63, [2.0] * 63), (2, 3, [1.0] * 65, [2.0] * 65)]
+        pairs = spark.createDataFrame(
+            rows, "id_a long, id_b long, ea array<double>, eb array<double>"
+        ).coalesce(1)
+        with pytest.raises(Exception, match="rows of unequal length"):
+            _cosine_verify(pairs, _AttachedVectors(), **reducer).collect()
 
 
 class TestPQ:

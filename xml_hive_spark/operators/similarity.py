@@ -9,6 +9,8 @@ Two paths per BASELINE.md north_star:
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -424,19 +426,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     entries, and the verify cosine is a ratio of exact integer
     aggregates — every stage replays verbatim in SQL, so the driver
     hash-checks candidate generation AND the verify (see
-    banded_signatures / cosine_threshold_pairs).
+    banded_signatures / _cosine_verify).
 
-    Round-8 reshape (measured 6.38 → 2.32 s at sf0.1, identical rows):
-    the candidate phase moves IDS ONLY — the earlier version carried
-    both 64-float vectors through the (band, bucket) self-join exchange
-    AND the cross-band dedupe (via first()-aggregates), ~60× the bytes
-    of an id pair; vectors now attach exactly once per SURVIVING pair
-    (the ``ann_join_topk`` candidate discipline). The signature table
-    is persisted (double-sided self-join would otherwise run the
-    signature UDF once per side — the signature-store pattern), and the
-    exact-cosine verify is one numpy einsum per Arrow batch
-    (:func:`cosine_threshold_pairs`) instead of a ~200-step interpreted
-    JVM fold per pair.
+    The candidate phase moves IDS ONLY (:func:`_band_candidates`) —
+    carrying both 64-float vectors through the (band, bucket) self-join
+    exchange and the cross-band dedupe costs ~60× the bytes of an id
+    pair; vectors reach the verify once per SURVIVING pair. The
+    signature table is persisted (double-sided self-join would otherwise
+    run the signature UDF once per side — the signature-store pattern),
+    and the exact-cosine verify is one numpy einsum per Arrow batch
+    (:func:`_cosine_verify`) instead of a ~200-step interpreted JVM fold
+    per pair.
 
     Skewed buckets (near-constant corpora) can salt the bucket id with a
     low-cardinality shard key, trading a per-shard re-join — the standard
@@ -469,7 +469,7 @@ def embedding_cosine_pairs(
     n: int | None = None,
     vec_path: str | None = None,
 ) -> DataFrame:
-    """The full banded-LSH → dedupe → attach → exact-verify pipeline of
+    """The full banded-LSH → dedupe → exact-verify pipeline of
     :func:`dedup_embedding_cosine`, parameterized on the threshold (and
     banding) so the sparse production regime (θ ≥ 0.85) is testable
     independently of the committed θ = 0.25 registry shape — the
@@ -478,184 +478,266 @@ def embedding_cosine_pairs(
     not the plan: candidates are banding-bound and identical across θ,
     and the θ ≥ 0.85 pair set scales with the planted near-dup count.
 
-    ``n``: caller-supplied corpus count (r13: the registry entry passes
-    the parquet footer count — no scheduled job); None → count().
+    ``n``: caller-supplied corpus count (the registry entry passes the
+    parquet footer count — no scheduled job); None → count().
 
-    ``vec_path`` (r14): the corpus parquet path, REQUIRED to be the
-    exact source of ``emb`` with (vec_id, embedding) columns (only the
-    registry entry passes it). While the vector table provably fits a
-    per-worker load, the verify ships (id_a, id_b) only (~16 B/row vs
-    ~528 B/row with both vectors attached — at θ = 0.25 the candidate
-    set is quadratic-output-bound, the single largest Arrow crossing
-    in the registry) and each task side-loads the vectors once
-    (:func:`cosine_partial_topk_sideload` discipline); the persisted
-    signature store also drops ``vec`` (~10× smaller, the
-    ann_join_topk r13 slimming). Beyond the cap, or for synthetic
-    inputs (vec_path=None), the attach-join shape is unchanged."""
+    ``vec_path``: the corpus parquet path, REQUIRED to be the exact
+    source of ``emb`` with (``id_col``, ``vec_col``) columns. It lets
+    :func:`_vector_source` side-load the vectors per task, so the verify
+    ships (id_a, id_b) only (~16 B/row vs ~528 B/row with both vectors
+    attached — at θ = 0.25 the candidate set is quadratic-output-bound,
+    the single largest Arrow crossing in the registry) and the persisted
+    signature store drops ``vec`` (~10× smaller). Beyond the cap, or for
+    synthetic inputs (vec_path=None), the vectors are attached from the
+    persisted store, which saves a second corpus scan."""
     if n is None:
         n = emb.count()  # sizes the attach-side broadcast guard
-    import os as _os
-
-    sideload = (
-        vec_path is not None
-        and n * 600 <= _SIDELOAD_CAP
-        and _os.path.exists(vec_path)
-        and (id_col, vec_col) == ("vec_id", "embedding")
-    )
+    vectors = _vector_source(n, vec_path, id_col, vec_col)
     sigs = banded_signatures(emb, id_col, vec_col,
                              bands=bands, rows_per_band=rows_per_band)
-    if sideload:
-        sigs = sigs.select("id", "sig")  # verify never reads vec
+    vecs = sigs.select("id", "vec")  # read from the store when attaching
+    if not vectors.columns:
+        sigs = sigs.select("id", "sig")  # the verify never reads vec
     sigs = sigs.persist()
+    pairs = vectors.attach(_band_candidates(sigs, "id_a", "id_b"), vecs, n)
+    return _cosine_verify(pairs, vectors, threshold=threshold)
+
+
+def _band_candidates(sigs: DataFrame, left: str, right: str) -> DataFrame:
+    """Distinct UNDIRECTED candidate pairs (``left`` < ``right``) of an
+    ``(id, sig)`` signature table: per band, ids shuffle on (band,
+    bucket) and only same-bucket ids pair up — O(sum of bucket^2), never
+    all-pairs. Band collision and cosine are both symmetric, so keeping
+    one direction halves the dedupe and verify volume, and pairs seen in
+    several bands are deduped on ids alone before the verify, so each
+    surviving pair pays the cosine once."""
     cand = sigs.select("id", F.posexplode("sig").alias("band", "bucket"))
-    a = cand.select("band", "bucket", F.col("id").alias("id_a"))
-    b = cand.select("band", "bucket", F.col("id").alias("id_b"))
-    pairs = a.join(b, ["band", "bucket"]).filter(F.col("id_a") < F.col("id_b"))
-    uniq = pairs.select("id_a", "id_b").distinct()
-    if sideload:
-        return cosine_threshold_pairs_sideload(uniq, threshold, vec_path)
-    # ~600 B/row vector payload: broadcast only while provably small
-    vecs = payload_side(sigs.select("id", "vec"), n * 600)
-    attached = (
-        uniq.join(
-            vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("ea")),
-            "id_a",
-        )
-        .join(
-            vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("eb")),
-            "id_b",
-        )
-        .select("id_a", "id_b", "ea", "eb")
+    a = cand.select("band", "bucket", F.col("id").alias(left))
+    b = cand.select("band", "bucket", F.col("id").alias(right))
+    return (
+        a.join(b, ["band", "bucket"])
+        .filter(F.col(left) < F.col(right))
+        .select(left, right)
+        .distinct()
     )
-    return cosine_threshold_pairs(attached, threshold)
 
 
-def cosine_threshold_pairs(pairs: DataFrame, threshold: float,
-                           dim: int = 64) -> DataFrame:
-    """Exact-cosine verify for candidate pairs (id_a, id_b, ea, eb):
-    one numpy einsum per Arrow batch, threshold filter applied inside
-    the batch — the ALL-pairs-above-θ counterpart of
-    :func:`cosine_partial_topk` (which keeps top-k instead). No
-    exchange: mapInArrow preserves the attach-join's partitioning, and
-    only surviving (id_a, id_b, cos) triples cross the boundary."""
+#: byte ceiling for the worker-side vector-table load of
+#: :class:`_SideloadedVectors`. Tighter than ``_ATTACH_BROADCAST_CAP``
+#: (256 MB) because every CONCURRENT Python worker holds its own copy
+#: (cores-per-node copies vs one broadcast per executor JVM); 64 MB × 32
+#: local workers = 2 GB peak, same order as the broadcast the attach
+#: join builds.
+_SIDELOAD_CAP = 64 << 20
+
+
+def _vector_source(n: int, vec_path: str | None, id_col: str, vec_col: str):
+    """Where :func:`_cosine_verify` reads the vectors of ``n`` corpus
+    rows from: side-load the (``id_col``, ``vec_col``) table at
+    ``vec_path`` while it provably fits a per-worker load (~600 B per
+    row: 64 floats + id + array overhead) and the parquet is
+    task-readable; otherwise attach them to each pair."""
+    if (
+        vec_path is not None
+        and n * 600 <= _SIDELOAD_CAP
+        and os.path.exists(vec_path)
+    ):
+        return _SideloadedVectors(vec_path, id_col, vec_col)
+    return _AttachedVectors()
+
+
+def _quantized_rows(col):
+    """(2^20-quantized ``(n, dim)`` matrix, float64 row norms) of an
+    Arrow list column whose rows all share the first row's length.
+
+    A null or ragged row raises ``ValueError``: a plain reshape of the
+    flattened values would split them across row boundaries whenever the
+    lengths merely sum right (63 + 65), and score garbage silently."""
+    import numpy as np
+
+    m = None
+    if col.null_count == 0:
+        m = fixed_dim_matrix(col, len(col[0]) if len(col) else 0)
+    if m is None:
+        raise ValueError(
+            "vector column has a null row or rows of unequal length"
+        )
+    q = _quantize20(m)
+    return q, np.sqrt(np.einsum("ij,ij->i", q, q).astype(np.float64))
+
+
+def _row_index(vid, ids):
+    """Row of each of the Arrow ``ids`` in the sorted id array ``vid``.
+    An id absent from ``vid`` raises ``ValueError``: a bare searchsorted
+    would hand it its neighbour's row and score the wrong vector."""
+    import numpy as np
+
+    ids = ids.to_numpy(zero_copy_only=False)
+    idx = np.searchsorted(vid, ids).clip(max=max(len(vid) - 1, 0))
+    miss = ids != vid[idx] if len(vid) else np.ones(len(ids), dtype=bool)
+    if miss.any():
+        raise ValueError(
+            f"{int(miss.sum())} pair ids missing from the side-loaded "
+            f"vector table, e.g. {ids[miss][:5].tolist()}"
+        )
+    return idx
+
+
+class _AttachedVectors:
+    """Vector source: both vectors ride on each pair as list columns
+    ``ea``/``eb``, joined on by :meth:`attach`."""
+
+    columns = ("ea", "eb")
+
+    @staticmethod
+    def attach(pairs: DataFrame, vecs: DataFrame, n: int) -> DataFrame:
+        """Join the ``(id, vec)`` frame ``vecs`` of ``n`` rows onto both
+        ids of ``pairs`` — broadcast only while provably small
+        (~600 B/row), sort-merge beyond the cap."""
+        left, right = pairs.columns
+        id_col, vec_col = vecs.columns
+        vecs = payload_side(vecs, n * 600)
+        return (
+            pairs.join(vecs.select(F.col(id_col).alias(left),
+                                   F.col(vec_col).alias("ea")), left)
+            .join(vecs.select(F.col(id_col).alias(right),
+                              F.col(vec_col).alias("eb")), right)
+            .select(left, right, "ea", "eb")
+        )
+
+    def load(self):
+        def gather(batch):
+            return (*_quantized_rows(batch.column(2)),
+                    *_quantized_rows(batch.column(3)))
+
+        return gather
+
+
+class _SideloadedVectors:
+    """Vector source: the pairs carry ids only (~16 B/row instead of
+    ~528 B with both vectors, which re-serializes a vector once per pair
+    it appears in) and each task reads the (``id_col``, ``vec_col``)
+    parquet table once, sorts it by id, quantizes it and takes its norms
+    in advance, then gathers both vectors of each pair by id. Loaded
+    lazily, so empty partitions never read. Bit-identical to
+    :class:`_AttachedVectors`: the parquet column is float32 (``t()``
+    pins that dtype), the dtype the attach join ships, so the
+    float32 → float64 → quantize chain is the same. NOT a cache: the
+    read happens inside the task, per execution, from the query's input
+    table."""
+
+    columns = ()
+
+    def __init__(self, path: str, id_col: str, vec_col: str):
+        self.path, self.id_col, self.vec_col = path, id_col, vec_col
+
+    @staticmethod
+    def attach(pairs: DataFrame, vecs: DataFrame, n: int) -> DataFrame:
+        return pairs
+
+    def load(self):
+        import numpy as np
+        import pyarrow.dataset as ds
+
+        tab = ds.dataset(self.path).to_table(
+            columns=[self.id_col, self.vec_col]
+        )
+        vid = np.asarray(
+            tab.column(self.id_col).to_numpy(zero_copy_only=False),
+            dtype=np.int64,
+        )
+        vmat, vnorm = _quantized_rows(tab.column(self.vec_col).combine_chunks())
+        order = np.argsort(vid, kind="stable")
+        vid, vmat, vnorm = vid[order], vmat[order], vnorm[order]
+
+        def gather(batch):
+            ia = _row_index(vid, batch.column(0))
+            ib = _row_index(vid, batch.column(1))
+            return vmat[ia], vnorm[ia], vmat[ib], vnorm[ib]
+
+        return gather
+
+
+def _cosine_verify(pairs: DataFrame, vectors, *,
+                   threshold: float | None = None,
+                   k: int | None = None) -> DataFrame:
+    """Exact cosine of UNDIRECTED candidate pairs — two id columns, then
+    the ``vectors.columns`` of the vector source — scored with one numpy
+    einsum per Arrow batch inside one mapInArrow (no exchange: mapInArrow
+    preserves the input's partitioning; no ~200-step interpreted JVM
+    fold per pair). Exactly one reducer:
+
+    - ``threshold``: keep the pairs with cos > θ;
+    - ``k``: fold each scored pair into BOTH endpoints' partition-local
+      top-k heaps (cosine is symmetric, so scoring (u, v) once serves u
+      and v alike). The output feeds the caller's global merge window
+      and the cut is exact, as in :func:`partial_topk_per_query`.
+
+    Output: (the two id columns, ``cos_sim`` double); for ``k`` the
+    first id owns the heap.
+
+    The cosine is QUANTIZED: dot and squared norms are exact int64 sums
+    of floor(v·2^20) entries, so the final sqrts and division produce
+    BIT-IDENTICAL doubles in numpy and SQL regardless of summation order
+    (the float einsum's last-ulp order sensitivity kept this family's
+    oracles unreachable). Error vs the float cosine is O(2^-20) —
+    invisible at the 1e-4 output grain."""
     import numpy as np
     import pyarrow as pa
     from typing import Iterator
 
-    sel = pairs.select("id_a", "id_b", "ea", "eb")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"id_a {id_types[0]}, id_b {id_types[1]}, cos_sim double"
+    if (threshold is None) == (k is None):
+        raise ValueError("_cosine_verify: pass exactly one of threshold, k")
+    ids = pairs.columns[:2]
+    sel = pairs.select(*ids, *vectors.columns)
+    out_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in sel.schema.fields[:2]
+    ) + ", cos_sim double"
+    names = [*ids, "cos_sim"]
 
     def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        gather = None
+        acc: dict = {}
+        id_types = None
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ea = fixed_dim_matrix(batch.column("ea"), dim)
-            eb = fixed_dim_matrix(batch.column("eb"), dim)
-            if ea is None or eb is None:  # ragged/null rows: exact slow path
-                ea = np.stack([
-                    np.asarray(v, dtype=np.float64)
-                    for v in batch.column("ea").to_pylist()
-                ])
-                eb = np.stack([
-                    np.asarray(v, dtype=np.float64)
-                    for v in batch.column("eb").to_pylist()
-                ])
-            # QUANTIZED cosine (r9): dot and squared norms are exact
-            # int64 sums of floor(v·2^20) entries, so the final two
-            # sqrts and one division produce BIT-IDENTICAL doubles in
-            # numpy and SQL regardless of summation order — the float
-            # einsum's last-ulp order sensitivity was the one thing
-            # keeping this family's oracles unreachable. Error vs the
-            # float cosine is O(2^-20) — invisible at the 1e-4 output
-            # grain.
-            qa, qb = _quantize20(ea), _quantize20(eb)
-            cos = np.einsum("ij,ij->i", qa, qb).astype(np.float64) / (
-                np.sqrt(np.einsum("ij,ij->i", qa, qa).astype(np.float64))
-                * np.sqrt(np.einsum("ij,ij->i", qb, qb).astype(np.float64))
-            )
-            m = cos > threshold
-            if m.any():
-                keep = pa.array(m)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column("id_a").filter(keep),
-                        batch.column("id_b").filter(keep),
-                        pa.array(cos[m]),
-                    ],
-                    names=["id_a", "id_b", "cos_sim"],
-                )
-
-    return sel.mapInArrow(fn, out_schema)
-
-
-def cosine_threshold_pairs_sideload(pairs: DataFrame, threshold: float,
-                                    vec_path: str) -> DataFrame:
-    """:func:`cosine_threshold_pairs` with the vectors SIDE-LOADED per
-    task instead of joined onto every candidate pair — the threshold
-    counterpart of :func:`cosine_partial_topk_sideload` (see there for
-    the byte accounting and the bit-identity argument; the parquet
-    column is float32, the same dtype the attach join ships, so
-    float32→float64→quantize is the identical chain). Input is
-    (id_a, id_b) ids only; output (id_a, id_b, cos_sim) for pairs
-    above the threshold, exactly as the attach formulation."""
-    import numpy as np
-    import pyarrow as pa
-    from typing import Iterator
-
-    sel = pairs.select("id_a", "id_b")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"id_a {id_types[0]}, id_b {id_types[1]}, cos_sim double"
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import pyarrow.dataset as _ds
-
-        vid = vmat = vnorm = None
-        for batch in batches:
-            if batch.num_rows == 0:
+            if gather is None:  # once per task, after the first real batch
+                gather = vectors.load()
+            qa, na, qb, nb = gather(batch)
+            cos = np.einsum("ij,ij->i", qa, qb).astype(np.float64) / (na * nb)
+            a, b = batch.column(0), batch.column(1)
+            if k is None:
+                m = cos > threshold
+                if m.any():
+                    keep = pa.array(m)
+                    yield pa.RecordBatch.from_arrays(
+                        [a.filter(keep), b.filter(keep), pa.array(cos[m])],
+                        names=names,
+                    )
                 continue
-            if vmat is None:  # once per task, after the first real batch
-                tab = _ds.dataset(vec_path).to_table(
-                    columns=["vec_id", "embedding"]
-                )
-                vid = np.asarray(
-                    tab.column("vec_id").to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                )
-                flat = np.asarray(
-                    tab.column("embedding").combine_chunks().flatten()
-                    .to_numpy(zero_copy_only=False),
-                    dtype=np.float32,
-                )
-                vmat = _quantize20(
-                    flat.astype(np.float64).reshape(len(vid), -1)
-                )
-                order = np.argsort(vid, kind="stable")
-                vid, vmat = vid[order], vmat[order]
-                vnorm = np.sqrt(
-                    np.einsum("ij,ij->i", vmat, vmat).astype(np.float64)
-                )
-            ia = np.searchsorted(
-                vid, batch.column(0).to_numpy(zero_copy_only=False)
+            id_types = (a.type, b.type)
+            a = a.to_numpy(zero_copy_only=False)
+            b = b.to_numpy(zero_copy_only=False)
+            _topk_accumulate(acc, a, b, cos, k)
+            _topk_accumulate(acc, b, a, cos, k)
+        if acc:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(
+                        np.concatenate(
+                            [np.full(len(v[0]), q) for q, v in acc.items()]
+                        ),
+                        type=id_types[0],
+                    ),
+                    pa.array(
+                        np.concatenate([v[1] for v in acc.values()]),
+                        type=id_types[1],
+                    ),
+                    pa.array(np.concatenate([v[0] for v in acc.values()])),
+                ],
+                names=names,
             )
-            ib = np.searchsorted(
-                vid, batch.column(1).to_numpy(zero_copy_only=False)
-            )
-            qa, qb = vmat[ia], vmat[ib]
-            cos = np.einsum("ij,ij->i", qa, qb).astype(np.float64) / (
-                vnorm[ia] * vnorm[ib]
-            )
-            m = cos > threshold
-            if m.any():
-                keep = pa.array(m)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0).filter(keep),
-                        batch.column(1).filter(keep),
-                        pa.array(cos[m]),
-                    ],
-                    names=["id_a", "id_b", "cos_sim"],
-                )
 
     return sel.mapInArrow(fn, out_schema)
 
@@ -1466,175 +1548,6 @@ def _topk_accumulate(acc: dict, qid, nid, adc, k: int) -> None:
         acc[q] = (a, nn)
 
 
-def cosine_partial_topk(pairs: DataFrame, k: int,
-                        symmetric: bool = False) -> DataFrame:
-    """Score candidate pairs (qid, nid, qe, ne) with a VECTORIZED numpy
-    cosine and reduce to a partition-local top-``k`` per query in the
-    same mapInArrow pass — no exchange, no per-pair interpreted JVM fold
-    (the higher-order ``aggregate`` lambda evaluates per element; at
-    millions of candidate pairs that is ~200 interpreted steps each,
-    vs one BLAS einsum per Arrow batch here). Output (qid, nid, adc)
-    feeds the same global merge window as :func:`partial_topk_per_query`;
-    the cut is exact for the same reason.
-
-    ``symmetric=True`` takes UNDIRECTED pairs (each unordered candidate
-    exactly once) and accumulates both directions into the per-query
-    heaps — cosine is symmetric, so scoring (u,v) once serves u's and
-    v's top-k alike. Callers then shuffle/score HALF the candidate rows
-    of the directed formulation for the identical result."""
-    import numpy as np
-    import pyarrow as pa
-    from typing import Iterator
-
-    sel = pairs.select("qid", "nid", "qe", "ne")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"qid {id_types[0]}, nid {id_types[1]}, adc double"
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        acc: dict = {}
-        id_arrow = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            id_arrow = (batch.schema.field(0).type, batch.schema.field(1).type)
-            qid = batch.column(0).to_numpy(zero_copy_only=False)
-            nid = batch.column(1).to_numpy(zero_copy_only=False)
-            # ListArray -> (n, dim): flatten() honors slice offsets
-            qm = _quantize20(np.asarray(
-                batch.column(2).flatten().to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            ).reshape(batch.num_rows, -1))
-            nm = _quantize20(np.asarray(
-                batch.column(3).flatten().to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            ).reshape(batch.num_rows, -1))
-            # quantized cosine — exact int64 sums, bit-identical doubles
-            # in any engine (see cosine_threshold_pairs)
-            adc = np.einsum("ij,ij->i", qm, nm).astype(np.float64) / (
-                np.sqrt(np.einsum("ij,ij->i", qm, qm).astype(np.float64))
-                * np.sqrt(np.einsum("ij,ij->i", nm, nm).astype(np.float64))
-            )
-            _topk_accumulate(acc, qid, nid, adc, k)
-            if symmetric:
-                _topk_accumulate(acc, nid, qid, adc, k)
-        if acc:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(
-                            [np.full(len(v[0]), q) for q, v in acc.items()]
-                        ),
-                        type=id_arrow[0],
-                    ),
-                    pa.array(
-                        np.concatenate([v[1] for v in acc.values()]),
-                        type=id_arrow[1],
-                    ),
-                    pa.array(np.concatenate([v[0] for v in acc.values()])),
-                ],
-                names=["qid", "nid", "adc"],
-            )
-
-    return sel.mapInArrow(fn, out_schema)
-
-
-#: byte ceiling for the worker-side vector-table load of
-#: :func:`cosine_partial_topk_sideload`. Tighter than
-#: ``_ATTACH_BROADCAST_CAP`` (256 MB) because every CONCURRENT Python
-#: worker holds its own copy (cores-per-node copies vs one broadcast
-#: per executor JVM); 64 MB × 32 local workers = 2 GB peak, same order
-#: as the broadcast the join path builds.
-_SIDELOAD_CAP = 64 << 20
-
-
-def cosine_partial_topk_sideload(pairs: DataFrame, k: int, vec_path: str,
-                                 symmetric: bool = False) -> DataFrame:
-    """:func:`cosine_partial_topk` with the vectors SIDE-LOADED in the
-    Python task instead of joined onto every pair (guide §4.1/§8: the
-    ids decide, the payload moves once). The join formulation ships
-    (qid, nid, qe, ne) ≈ 528 B per candidate pair across the
-    JVM→Python boundary — the vectors are serialized once per PAIR, so
-    a vector in 300 candidates crosses 300 times. Here the mapInArrow
-    input is (qid, nid) ≈ 16 B/row (~33× less Arrow traffic) and each
-    task reads the corpus vector table ONCE from parquet (bounded by
-    :data:`_SIDELOAD_CAP` — broadcast-equivalent bytes, loaded lazily
-    so empty partitions never read), then gathers (qe, ne) by id with
-    numpy. Bit-identical scores: the parquet column is float32 (and
-    ``t()`` pins that dtype), so float32→float64→quantize is the same
-    chain the Arrow-shipped path runs; the per-row einsum/sqrt/divide
-    expressions are unchanged. NOT a cache: the read happens inside
-    the task, per execution, from the query's input table."""
-    import numpy as np
-    import pyarrow as pa
-    from typing import Iterator
-
-    sel = pairs.select("qid", "nid")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"qid {id_types[0]}, nid {id_types[1]}, adc double"
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import pyarrow.dataset as _ds
-
-        vid = vmat = vnorm = None
-        acc: dict = {}
-        id_arrow = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if vmat is None:  # once per task, after the first real batch
-                tab = _ds.dataset(vec_path).to_table(
-                    columns=["vec_id", "embedding"]
-                )
-                vid = np.asarray(
-                    tab.column("vec_id").to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                )
-                flat = np.asarray(
-                    tab.column("embedding").combine_chunks().flatten()
-                    .to_numpy(zero_copy_only=False),
-                    dtype=np.float32,
-                )
-                vmat = _quantize20(
-                    flat.astype(np.float64).reshape(len(vid), -1)
-                )
-                order = np.argsort(vid, kind="stable")
-                vid, vmat = vid[order], vmat[order]
-                vnorm = np.sqrt(
-                    np.einsum("ij,ij->i", vmat, vmat).astype(np.float64)
-                )
-            id_arrow = (batch.schema.field(0).type, batch.schema.field(1).type)
-            qid = batch.column(0).to_numpy(zero_copy_only=False)
-            nid = batch.column(1).to_numpy(zero_copy_only=False)
-            qi = np.searchsorted(vid, qid)
-            ni = np.searchsorted(vid, nid)
-            qm, nm = vmat[qi], vmat[ni]
-            adc = np.einsum("ij,ij->i", qm, nm).astype(np.float64) / (
-                vnorm[qi] * vnorm[ni]
-            )
-            _topk_accumulate(acc, qid, nid, adc, k)
-            if symmetric:
-                _topk_accumulate(acc, nid, qid, adc, k)
-        if acc:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(
-                            [np.full(len(v[0]), q) for q, v in acc.items()]
-                        ),
-                        type=id_arrow[0],
-                    ),
-                    pa.array(
-                        np.concatenate([v[1] for v in acc.values()]),
-                        type=id_arrow[1],
-                    ),
-                    pa.array(np.concatenate([v[0] for v in acc.values()])),
-                ],
-                names=["qid", "nid", "adc"],
-            )
-
-    return sel.mapInArrow(fn, out_schema)
-
-
 def partial_topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """Partition-local partial top-``k`` per query over (qid, nid, adc)
     rows — phase one of a two-phase distributed top-k.
@@ -2031,7 +1944,7 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     This is where the two-phase top-k earns its keep: candidate pairs
     come from banded-LSH buckets (O(sum bucket^2), never all-pairs),
     deduped across bands BEFORE scoring so each surviving pair pays the
-    dot product once, then ``partial_topk_per_query`` reduces each
+    dot product once, then a partition-local partial top-k reduces each
     partition to <= N x k rows with NO exchange before the single global
     merge window — a per-query ranking window over the raw candidate
     set would funnel every candidate of a query into one reducer.
@@ -2039,8 +1952,9 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     The candidate phase moves IDS ONLY, and only UNDIRECTED pairs: the
     band self-join keeps qid < nid, the cross-band dedupe shuffles one
     (qid, nid) row (~16 B) per unordered pair, and the two 64-float
-    vectors (~512 B) are joined back exactly once per SURVIVING pair for
-    the cosine — scored once and folded into BOTH endpoints' top-k heaps
+    vectors (~512 B) reach the cosine once per SURVIVING pair (side-loaded
+    per task while the table fits, else attached — :func:`_vector_source`)
+    — scored once and folded into BOTH endpoints' top-k heaps
     (cosine is symmetric), halving dedupe/attach/score volume vs the
     directed formulation for an identical result. At 100 TB the
     candidate shuffles are the dominant network cost and this keeps them
@@ -2066,7 +1980,7 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     moderate-similarity recall decays as r grows, which is the
     documented LSH precision/recall dial (floor asserted in tests at
     the SFs the tests run, where r=5). Scoring + phase-one top-k
-    are FUSED in one mapInArrow (:func:`cosine_partial_topk`): one BLAS
+    are FUSED in one mapInArrow (:func:`_cosine_verify`): one BLAS
     einsum per Arrow batch instead of an interpreted ~200-step JVM
     aggregate lambda per pair.
     FULL value oracle since r9: md5-Rademacher planes over quantized
@@ -2084,68 +1998,27 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     # bounded; at 100 TB this is the signature TABLE the pipeline
     # materializes next to the corpus (the phash-dedup fingerprint-store
     # pattern). Measured at sf0.1: 2.51 → 1.84 s with identical output.
-    # exact integer twin of the oracle's GREATEST(5, bindigits(n//64)-1);
-    # r13: the count comes from parquet footer metadata (table_rows) —
-    # the old emb.count() spent a full scheduled job (~0.17 s at sf0.1)
-    # to learn a number the footers already state
+    # exact integer twin of the oracle's GREATEST(5, bindigits(n//64)-1)
     n = table_rows(spark, sf, "embeddings")
     # min(30): band buckets ride array<int>, so 1 << (r-1) must fit int32
     r = min(30, max(5, (n // 64).bit_length() - 1))
-    # r13: persist (id, sig) ONLY — this query attaches vectors from
-    # the corpus table below (payload_side), never from the cache, so
-    # caching `vec` stored 64 floats/row (~10× the signature) that no
-    # consumer read; now the cache matches the "16 ints per vector"
-    # claim above
+    vectors = _vector_source(n, f"{sf}/embeddings.parquet",
+                             "vec_id", "embedding")
+    # persist (id, sig) ONLY: the vectors come from the corpus table
+    # (side-loaded, or attached below), never from the cache
     sigs = banded_signatures(emb, "vec_id", "embedding",
                              bands=16, rows_per_band=r) \
         .select("id", "sig").persist()
-    cand = sigs.select("id", F.posexplode("sig").alias("band", "bucket"))
-    a = cand.select("band", "bucket", F.col("id").alias("qid"))
-    b = cand.select("band", "bucket", F.col("id").alias("nid"))
-    pairs = a.join(b, ["band", "bucket"]).filter(F.col("qid") < F.col("nid"))
-    # dedupe band collisions before the expensive cosine on UNDIRECTED
-    # pairs (band collision is symmetric, cosine is symmetric): the
-    # dedupe shuffle, the vector-attach joins, and the einsum all touch
-    # HALF the rows of the directed formulation; the fused partial top-k
-    # (symmetric=True) folds each scored pair into both endpoints'
-    # heaps, so the directed result is identical — still ids-only
-    uniq = pairs.select("qid", "nid").distinct()
-    # r14 (guide §4.1/§8): while the vector table provably fits a
-    # per-worker load (and the corpus parquet is task-readable), score
-    # with the SIDE-LOADED kernel — the mapInArrow ships (qid, nid)
-    # ids only (~16 B/row) instead of (qid, nid, qe, ne) (~528 B/row,
-    # every vector re-serialized once per surviving pair; this query
-    # ships ~25× more Arrow rows than any other headline entry, so the
-    # pair-attached crossing dominated its cost). Beyond the cap the
-    # r11-r13 shape is unchanged: broadcast the vector table while
-    # provably small, pin sort-merge beyond the broadcast cap
-    # (corpus-sized broadcast is the r11 probe's failure class).
-    import os as _os
-
-    vec_path = f"{sf}/embeddings.parquet"
-    if n * 600 <= _SIDELOAD_CAP and _os.path.exists(vec_path):
-        scored = cosine_partial_topk_sideload(
-            uniq, 5, vec_path, symmetric=True
-        )
-    else:
-        # ~600 B per row (64 floats + ids + array overhead)
-        vecs = payload_side(emb.select("vec_id", "embedding"), n * 600)
-        uniq = uniq.join(
-            vecs.select(F.col("vec_id").alias("qid"),
-                        F.col("embedding").alias("qe")),
-            "qid",
-        ).join(
-            vecs.select(F.col("vec_id").alias("nid"),
-                        F.col("embedding").alias("ne")),
-            "nid",
-        )
-        scored = cosine_partial_topk(uniq, 5, symmetric=True)
-    w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), "nid")
+    pairs = vectors.attach(_band_candidates(sigs, "qid", "nid"),
+                           emb.select("vec_id", "embedding"), n)
+    scored = _cosine_verify(pairs, vectors, k=5)
+    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "nid")
     return (
         scored
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 5)
-        .select("qid", "nid", F.round("adc", 4).alias("cos_sim"), "rank")
+        .select("qid", "nid", F.round("cos_sim", 4).alias("cos_sim"),
+                "rank")
     )
 
 
