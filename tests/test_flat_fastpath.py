@@ -81,7 +81,7 @@ def test_fast_equals_slow(rec):
     if fast is not None:
         assert fast == slow, rec
     else:
-        # fallback records are handled by the exact path inside batches();
+        # fallback records are handled by the exact path inside the scan;
         # just pin that the exact path can process them
         assert isinstance(slow, tuple)
 
@@ -105,12 +105,22 @@ def test_malformed_modes():
     assert parse_record_safe(bad, st, "PERMISSIVE") == (None,) * 5
 
 
-def test_batches_roundtrip():
+def _scan(asm, tmp_path, records, batch_rows):
+    """Records written as one document and read back through the fused
+    scan; with the bool column every template batch converts per row."""
+    p = tmp_path / "doc.xml"
+    data = b"<root>\n" + b"\n".join(records) + b"\n</root>"
+    p.write_bytes(data)
+    return list(asm.fused_split_batches((str(p), 0, len(data), "TEXT", 0),
+                                        "r", batch_rows=batch_rows))
+
+
+def test_batches_roundtrip(tmp_path):
     import pyarrow as pa
 
     st = _schema()
     asm = FlatAssembler.try_create(st, "DROPMALFORMED")
-    out = list(asm.batches(iter(RECORDS), batch_rows=4))
+    out = _scan(asm, tmp_path, RECORDS, batch_rows=4)
     assert all(isinstance(b, pa.RecordBatch) for b in out)
     total = sum(b.num_rows for b in out)
     slow_rows = [
@@ -149,7 +159,7 @@ def test_template_learns_and_matches_uniform_records():
     assert tmpl.extract(empty) == parse_record_safe(empty, st, "FAILFAST")
 
 
-def test_batches_with_mixed_layouts_equals_slow_path():
+def test_batches_with_mixed_layouts_equals_slow_path(tmp_path):
     """A stream where most records share one layout (template path) and
     oddballs interleave (guards/fallbacks) must equal the exact path
     record-for-record — order preserved."""
@@ -164,7 +174,7 @@ def test_batches_with_mixed_layouts_equals_slow_path():
         stream.append(u)
         if i % 7 == 0:
             stream.append(RECORDS[i % len(RECORDS)])
-    out = list(asm.batches(iter(stream), batch_rows=16))
+    out = _scan(asm, tmp_path, stream, batch_rows=16)
     flat = [tuple(col[i].as_py() for col in b.columns)
             for b in out for i in range(b.num_rows)]
     slow = [

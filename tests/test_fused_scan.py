@@ -1,8 +1,9 @@
-"""Fused-scan exactness: FlatAssembler.iter_split_rows (template matched
-in place against the split buffer, exact token machinery on any
-mismatch) must produce EXACTLY the rows of the span-then-extract path —
-over generated documents, full cut sweeps, and every guard class the
-flat fast path defends against."""
+"""Fused-scan exactness: FlatAssembler.fused_split_batches (template
+matched in place against the split buffer, exact token machinery on any
+mismatch, columnar or per-row batch conversion) must produce EXACTLY the
+rows of the reference span path (iter_record_spans + fast_row /
+parse_record_safe) — over generated documents, full cut sweeps, and
+every guard class the flat fast path defends against."""
 
 from __future__ import annotations
 
@@ -64,14 +65,22 @@ def _span_path_rows(asm, data: bytes, row_tag: str, splits) -> list:
     return out
 
 
-def _fused_rows(asm, tmp_path, data: bytes, row_tag: str, splits) -> list:
+def _scan_batches(asm, tmp_path, data: bytes, row_tag: str, splits,
+                  batch_rows: int = 32768) -> list:
     p = tmp_path / "doc.xml"
     p.write_bytes(data)
     out = []
     for sp in splits:
         full = (str(p), sp[1], sp[2]) + tuple(sp[3:])
-        out += [tuple(v) for v in asm.iter_split_rows(full, row_tag)]
+        out += list(asm.fused_split_batches(full, row_tag,
+                                            batch_rows=batch_rows))
     return out
+
+
+def _fused_rows(asm, tmp_path, data: bytes, row_tag: str, splits) -> list:
+    return [tuple(r.values())
+            for b in _scan_batches(asm, tmp_path, data, row_tag, splits)
+            for r in b.to_pylist()]
 
 
 def _chained(data: bytes, row_tag: str, fence: list[int]):
@@ -216,26 +225,46 @@ def _int_schema():
     )
 
 
-def _tables(asm, tmp_path, data: bytes, row_tag: str, splits, batch_rows):
-    """(columnar table, row-path table) over the same splits."""
-    import pyarrow as pa
+def _typed_schema():
+    """bool/date/decimal columns: captures the columnar conversion never
+    takes, so every template batch is converted per row."""
+    from pyspark.sql.types import BooleanType, DateType, DecimalType
 
-    p = tmp_path / "doc.xml"
-    p.write_bytes(data)
-    new, old = [], []
-    for sp in splits:
-        full = (str(p), sp[1], sp[2]) + tuple(sp[3:])
-        new += list(asm.fused_split_batches(full, row_tag,
-                                            batch_rows=batch_rows))
-        old += list(asm._rows_to_batches(
-            asm.iter_split_rows(full, row_tag), batch_rows, None))
+    return StructType(
+        [
+            StructField("id", LongType(), True,
+                        metadata={"xmlKind": "attribute", "xmlName": "id"}),
+            StructField("ok", BooleanType(), True,
+                        metadata={"xmlKind": "element", "xmlName": "ok"}),
+            StructField("d", DateType(), True,
+                        metadata={"xmlKind": "element", "xmlName": "d"}),
+            StructField("m", DecimalType(10, 2), True,
+                        metadata={"xmlKind": "attribute", "xmlName": "m"}),
+        ]
+    )
+
+
+def _tables(asm, tmp_path, data: bytes, row_tag: str, splits, batch_rows):
+    """(scan table, reference table) over the same splits; the reference
+    rows are Arrow-typed column by column, independently of the scan's
+    batch sink."""
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
+
     from xml_hive_spark.flat import strip_metadata
 
     aschema = to_arrow_schema(strip_metadata(asm.struct))
-    tn = pa.Table.from_batches(new, schema=aschema)
-    to_ = pa.Table.from_batches(old, schema=aschema)
-    return tn, to_
+    got = pa.Table.from_batches(
+        _scan_batches(asm, tmp_path, data, row_tag, splits, batch_rows),
+        schema=aschema,
+    )
+    rows = _span_path_rows(asm, data, row_tag, splits)
+    want = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(aschema)],
+        schema=aschema,
+    )
+    return got, want
 
 
 # every row here drives a different columnar-safety decision: entities,
@@ -261,9 +290,43 @@ ADVERSARIAL_DOC = (
 )
 
 
+# the bool/date/decimal twin: Python-only bool spellings, impossible
+# dates, decimal forms with entities/space/exponent, empty elements,
+# decoy comments — every template batch takes the per-row conversion and
+# the rejected rows re-read their span
+TYPED_ADVERSARIAL_DOC = (
+    b"<dataset>\n"
+    b'<rec id="1" m="1.25"><ok>true</ok><d>2024-01-02</d></rec>\n'
+    b'<rec id="2" m="3"><ok>TRUE</ok><d>2024-02-29</d></rec>\n'
+    b'<rec id="3" m=" 4.5 "><ok>0</ok><d>2023-02-29</d></rec>\n'
+    b'<rec id="4" m="&#49;.5"><ok>1</ok><d>2024-03-01</d></rec>\n'
+    b'<!-- decoy <rec id="x" m="9"><ok>1</ok></rec> -->\n'
+    b'<rec id="5" m="1e2"><ok></ok><d></d></rec>\n'
+    b'<rec id="6" m=""><ok>  1  </ok><d> 2024-04-05 </d></rec>\n'
+    b'<rec id="7" m="abc"><ok>false</ok><d>2024-13-01</d></rec>\n'
+    b'<rec id="8" m="1_0"><ok>False</ok><d>2024-05-06</d></rec>\n'
+    b'<rec id="9" m="7.77"><ok>1</ok><d>2024-06-07</d></rec>\n'
+    b'<rec id="10" m="8"><ok>yes</ok><d>2024-07-08</d></rec>\n'
+    b"</dataset>\n"
+)
+
+
+def _run_captures(asm, rec: bytes):
+    """(template learned from ``rec``, its run-match captures) as the
+    fused scan hands them to the batch sink."""
+    from xml_hive_spark.flat import _Template
+
+    tmpl = _Template.learn(rec, asm.fields)
+    return tmpl, [tmpl.rx_run.match(rec).groups()]
+
+
 def test_columnar_batches_equal_row_path_adversarial(tmp_path):
     asm = FlatAssembler.try_create(_int_schema(), "PERMISSIVE")
-    assert asm._columnar_ok
+    # clean string/int captures take the columnar conversion
+    tmpl, caps = _run_captures(
+        asm, b'<rec id="1"><cat>a</cat><val>2</val></rec>')
+    cols = asm._convert_run_columns(caps, asm._arrow_schema()[1], tmpl)
+    assert [c.to_pylist() for c in cols] == [[1], ["a"], [2]]
     splits = [("", 0, len(ADVERSARIAL_DOC), "TEXT", 0)]
     for batch_rows in (3, 4, 32768):  # force mid-run flushes + stitching
         tn, to_ = _tables(asm, tmp_path, ADVERSARIAL_DOC, "rec", splits,
@@ -277,21 +340,60 @@ def test_columnar_batches_equal_row_path_adversarial(tmp_path):
     assert rows[""]["val"] is None       # "  " elem trims to "" / val None
 
 
+def test_typed_batches_equal_span_path_adversarial(tmp_path):
+    from datetime import date
+    from decimal import Decimal
+
+    import pytest
+
+    from xml_hive_spark.flat import _NeedRowPath
+
+    # a bool/date/decimal capture sends the whole batch per row
+    asm = FlatAssembler.try_create(_typed_schema(), "PERMISSIVE")
+    tmpl, caps = _run_captures(
+        asm, b'<rec id="1" m="1.25"><ok>true</ok><d>2024-01-02</d></rec>')
+    with pytest.raises(_NeedRowPath):
+        asm._convert_run_columns(caps, asm._arrow_schema()[1], tmpl)
+    splits = [("", 0, len(TYPED_ADVERSARIAL_DOC), "TEXT", 0)]
+    for mode in ("PERMISSIVE", "DROPMALFORMED"):
+        asm = FlatAssembler.try_create(_typed_schema(), mode)
+        for batch_rows in (3, 4, 32768):
+            tn, to_ = _tables(asm, tmp_path, TYPED_ADVERSARIAL_DOC, "rec",
+                              splits, batch_rows)
+            assert tn.equals(to_), f"{mode} batch_rows={batch_rows}"
+    rows = {r["id"]: r for r in tn.to_pylist()}
+    assert rows[2] == {"id": 2, "ok": True, "d": date(2024, 2, 29),
+                       "m": Decimal("3.00")}
+    assert rows[6]["ok"] is True and rows[6]["m"] is None  # trim / ""
+    assert rows[4]["m"] == Decimal("1.50")  # entity decoded per row
+    assert not {3, 7, 10} & rows.keys()  # bad date/decimal/bool: dropped
+    assert len(rows) == 7
+
+
 def test_columnar_batches_equal_row_path_clean_and_cuts(tmp_path):
-    """Pure-uniform doc (all-columnar path) under a cut sweep, plus the
-    guard document (every guard class) under DROPMALFORMED."""
-    recs = "\n".join(
-        f'<rec id="{i}"><cat>c{i % 5}</cat><val>{i * 3}</val></rec>'
-        for i in range(500)
-    )
-    data = ("<dataset>\n" + recs + "\n</dataset>").encode()
-    asm = FlatAssembler.try_create(_int_schema(), "PERMISSIVE")
-    n = len(data)
-    for fence in ({0, n}, {0, n // 2, n}, {0, 101, 1013, n}):
-        splits = _chained(data, "rec", sorted(fence))
-        tn, to_ = _tables(asm, tmp_path, data, "rec", splits, 128)
-        assert tn.equals(to_)
-        assert tn.num_rows == 500
+    """Pure-uniform docs under a cut sweep — string/int (all-columnar)
+    and bool/date/decimal (all per-row) — plus the guard document (every
+    guard class) under DROPMALFORMED."""
+    docs = [
+        (_int_schema(), [
+            f'<rec id="{i}"><cat>c{i % 5}</cat><val>{i * 3}</val></rec>'
+            for i in range(500)
+        ]),
+        (_typed_schema(), [
+            f'<rec id="{i}" m="{i}.{i % 100:02d}"><ok>{"true" if i % 3 else "0"}'
+            f'</ok><d>2024-{i % 12 + 1:02d}-{i % 28 + 1:02d}</d></rec>'
+            for i in range(500)
+        ]),
+    ]
+    for schema, recs in docs:
+        data = ("<dataset>\n" + "\n".join(recs) + "\n</dataset>").encode()
+        asm = FlatAssembler.try_create(schema, "PERMISSIVE")
+        n = len(data)
+        for fence in ({0, n}, {0, n // 2, n}, {0, 101, 1013, n}):
+            splits = _chained(data, "rec", sorted(fence))
+            tn, to_ = _tables(asm, tmp_path, data, "rec", splits, 128)
+            assert tn.equals(to_)
+            assert tn.num_rows == 500
 
     for mode in ("PERMISSIVE", "DROPMALFORMED"):
         asm2 = FlatAssembler.try_create(_schema(), mode)
@@ -504,8 +606,7 @@ def test_run_batched_emits_multi_record_runs(tmp_path):
     asm = FlatAssembler.try_create(_int_schema(), "PERMISSIVE")
     runs = []
     with open(p, "rb") as f:
-        for item in asm._fused_scan(f, "rec", 0, len(data), "TEXT", 0,
-                                    raw=True):
+        for item in asm._fused_scan(f, "rec", 0, len(data), "TEXT", 0):
             if type(item) is list and type(item[0]) is list:
                 runs.append(len(item[0]))
     assert runs and max(runs) > 1

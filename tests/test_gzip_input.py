@@ -177,6 +177,38 @@ class TestBoundedCompressedRead:
         total = sum(getattr(b, "num_rows", 1) for b in rows)
         assert total == 20
 
+    def test_stream_flat_gz_reads_admitted_member_with_rejects(self,
+                                                                tmp_path):
+        """The streaming source's flat read is the fused scan bounded by
+        the admitted size: a member appended after admission stays
+        invisible, and a template-rejected value re-reads its record
+        (PERMISSIVE: the raw text lands in the corrupt column)."""
+        from xml_hive_spark.reader import tag_corrupt_field
+        from xml_hive_spark.sources.xml_stream import XmlStreamReader
+
+        recs = [
+            f'<rec id="{i}"><cat>c{i % 7}</cat><val>{i * 3}</val></rec>'
+            for i in range(40)
+        ]
+        bad = '<rec id="17"><cat>c3</cat><val>abc</val></rec>'
+        recs[17] = bad
+        p = tmp_path / "s.xml.gz"
+        p.write_bytes(gzip.compress(
+            ("<ds>\n" + "\n".join(recs) + "\n</ds>\n").encode()))
+        schema = tag_corrupt_field(SCHEMA, "_bad")
+        rd = XmlStreamReader(schema, {"path": str(tmp_path), "rowtag": "rec",
+                                      "mode": "PERMISSIVE"})
+        start, end = rd.initialOffset(), rd.latestOffset()
+        with open(p, "ab") as f:  # lands after admission
+            f.write(gzip.compress(
+                b'<ds><rec id="99"><cat>late</cat><val>1</val></rec></ds>'))
+        (part,) = rd.partitions(start, end)
+        rows = [r for b in rd.read(part) for r in b.to_pylist()]
+        want = [{"id": i, "cat": f"c{i % 7}", "val": i * 3, "_bad": None}
+                for i in range(40)]
+        want[17] = {"id": None, "cat": None, "val": None, "_bad": bad}
+        assert rows == want
+
     def test_stream_partition_carries_raw_limit(self, tmp_path):
         """The streaming source records the admitted size as the
         partition's raw cap and absorbs checkpointed offsets into the

@@ -201,7 +201,8 @@ class TestScannerNeverCrashes:
     def test_fused_scan_on_mutated_input(self, data, tmp_path_factory):
         """The fused template scan (columnar batches) over mutated
         uniform input must never raise and must agree with the span
-        path row-for-row."""
+        path (iter_record_spans + fast_row / parse_record_safe)
+        row-for-row."""
         from pyspark.sql.types import (IntegerType, LongType, StringType,
                                        StructField, StructType)
 
@@ -226,9 +227,14 @@ class TestScannerNeverCrashes:
         p.write_bytes(blob)
         asm = FlatAssembler.try_create(sch, "PERMISSIVE")
         split = (str(p), 0, len(blob), "TEXT", 0)
-        fused = [tuple(v) for v in asm.iter_split_rows(split, "rec")]
+        span_path = []
+        for _, rec in iter_record_spans(io.BytesIO(blob), "rec", 0, len(blob)):
+            vals = asm.fast_row(rec)
+            if vals is None:
+                vals = parse_record_safe(rec, sch, "PERMISSIVE")
+            span_path.append(vals)
         batches = list(asm.fused_split_batches(split, "rec", batch_rows=7))
         from_batches = [
             tuple(r.values()) for b in batches for r in b.to_pylist()
         ]
-        assert from_batches == fused
+        assert from_batches == span_path

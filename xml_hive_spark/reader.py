@@ -497,21 +497,19 @@ def split_summaries(
     return out
 
 
-def chain_splits(
-    open_fn: Callable[[], BinaryIO], bounds: list[int], row_tag: str
+def _fold_chain(
+    spans: list[tuple[int, int]],
+    summary_of: Callable[[int, int], dict[str, tuple[str, int, int]]],
 ) -> list[tuple[int, int, str, int]]:
-    """Phase B over one file: fold per-split summaries into the true
-    incoming ``(state, depth)`` of every split. ``bounds`` is the sorted
-    offset fence ``[0, b1, ..., size]``."""
+    """Phase B over one file: fold the phase-A summaries of its splits
+    (``summary_of(start, end)``, asked for every split but the last)
+    into the true incoming ``(state, depth)`` of every split."""
     ann: list[tuple[int, int, str, int]] = []
     state, depth = ST_TEXT, 0
-    for i in range(len(bounds) - 1):
-        a, b = bounds[i], bounds[i + 1]
+    for i, (a, b) in enumerate(spans):
         ann.append((a, b, state, depth))
-        if i < len(bounds) - 2:
-            with open_fn() as f:
-                summ = split_summaries(f, row_tag, a, b)
-            nxt_state, delta, mind = summ[state]
+        if i < len(spans) - 1:
+            nxt_state, delta, mind = summary_of(a, b)[state]
             if depth + mind < 0:
                 log.warning(
                     "xml split chain: depth underflow at [%d,%d) — malformed input?",
@@ -519,6 +517,19 @@ def chain_splits(
                 )
             state, depth = nxt_state, max(0, depth + delta)
     return ann
+
+
+def chain_splits(
+    open_fn: Callable[[], BinaryIO], bounds: list[int], row_tag: str
+) -> list[tuple[int, int, str, int]]:
+    """Phase A+B over one file, driver-side. ``bounds`` is the sorted
+    offset fence ``[0, b1, ..., size]`` (see :func:`byte_fence`)."""
+
+    def summary_of(a: int, b: int):
+        with open_fn() as f:
+            return split_summaries(f, row_tag, a, b)
+
+    return _fold_chain(list(zip(bounds, bounds[1:])), summary_of)
 
 
 def iter_record_spans(
@@ -809,6 +820,20 @@ def parse_record_safe(record_bytes: bytes, struct: StructType, mode: str):
 # ---------------------------------------------------------------- planning
 
 
+def byte_fence(path: str, size: int, partition_bytes: int) -> list[int]:
+    """Split offsets ``[0, b1, ..., end]`` of one input of ``size`` bytes:
+    equal ranges of at most ``partition_bytes``. ``size`` is passed in
+    because the streaming source fences at the size recorded in its
+    offset, not at the file's current size."""
+    if path.endswith(_COMPRESSED_SUFFIXES):
+        # non-splittable codec → whole-member split, scanner runs
+        # to EOF (parallelism = file count for compressed inputs)
+        return [0, GZIP_SPLIT_END]
+    n = max(1, (size + partition_bytes - 1) // partition_bytes)
+    step = (size + n - 1) // n
+    return [min(i * step, size) for i in range(n + 1)]
+
+
 def plan_splits(
     paths: list[str], partition_bytes: int = DEFAULT_PARTITION_BYTES
 ) -> list[tuple[str, int, int]]:
@@ -822,17 +847,8 @@ def plan_splits(
         size = os.path.getsize(p)
         if size == 0:
             continue
-        if p.endswith(_COMPRESSED_SUFFIXES):
-            # non-splittable codec → whole-member split, scanner runs
-            # to EOF (parallelism = file count for compressed inputs)
-            splits.append((p, 0, GZIP_SPLIT_END))
-            continue
-        n = max(1, (size + partition_bytes - 1) // partition_bytes)
-        step = (size + n - 1) // n
-        for i in range(n):
-            a, b = i * step, min((i + 1) * step, size)
-            if a < b:
-                splits.append((p, a, b))
+        fence = byte_fence(p, size, partition_bytes)
+        splits += [(p, a, b) for a, b in zip(fence, fence[1:])]
     return splits
 
 
@@ -971,16 +987,10 @@ def plan_annotated_splits(
     # phase B: fold per file
     out: list[AnnotatedSplit] = []
     for p, spans in by_file.items():
-        state, depth = ST_TEXT, 0
-        for i, (a, b) in enumerate(spans):
-            out.append((p, a, b, state, depth))
-            if i < len(spans) - 1:
-                nxt_state, delta, mind = summaries[(p, a)][state]
-                if depth + mind < 0:
-                    log.warning(
-                        "xml split chain: depth underflow in %s at [%d,%d)", p, a, b
-                    )
-                state, depth = nxt_state, max(0, depth + delta)
+        out += [
+            (p, *s)
+            for s in _fold_chain(spans, lambda a, b, p=p: summaries[(p, a)])
+        ]
     if cache_key is not None:
         if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
             _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))

@@ -301,8 +301,9 @@ def compile_filter_arrow(f: Filter, schema: StructType):
     is_int = type(dtype) in _PA_INTS
     is_flt = isinstance(dtype, (FloatType, DoubleType))
     if not (is_str or is_int or is_flt):
-        # bool/decimal/date columns never take the columnar scan anyway
-        # (FlatAssembler._columnar_ok) — don't bother compiling
+        # bool/decimal/date batches are always converted per row
+        # (FlatAssembler._convert_run_columns), where the row predicate
+        # filters the tuples — no Arrow twin needed
         return None
 
     def lit_ok(lit):

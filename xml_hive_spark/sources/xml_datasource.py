@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
+from xml_hive_spark.flat import FlatAssembler
 from xml_hive_spark.reader import (
     DEFAULT_PARTITION_BYTES,
     _read_split,
@@ -190,38 +191,42 @@ class XmlHiveReader(DataSourceReader):
     def read(self, partition: XmlInputPartition):
         if partition is None or partition.end <= partition.start:
             return
-        split = (partition.path, partition.start, partition.end,
-                 partition.state, partition.depth)
-        # flat scalar schemas take the columnar regex fast path and ship
-        # Arrow RecordBatches straight through the DataSource worker;
-        # nested schemas yield tuples (worker converts per value)
-        from xml_hive_spark.flat import FlatAssembler
         from xml_hive_spark.sources.pushdown import (
             compile_conjunction,
             compile_conjunction_arrow,
         )
 
         keep = compile_conjunction(self._pushed)
-        asm = FlatAssembler.try_create(self._schema, self._mode)
-        if asm is not None:
-            # fused scan: template matched against the split buffer in
-            # place — no per-record slice/fullmatch on uniform runs.
-            # Pushed filters ride the columnar kernel as one vectorized
-            # Kleene mask per batch when every filter arrow-compiles.
-            arrow_keep = (
-                compile_conjunction_arrow(self._pushed_raw, self._schema)
-                if keep is not None else None
-            )
-            yield from asm.fused_split_batches(
-                split, self._row_tag, predicate=keep,
-                arrow_predicate=arrow_keep,
-            )
-        elif keep is None:
-            yield from _read_split(split, self._row_tag, self._schema, self._mode)
-        else:
-            for row in _read_split(split, self._row_tag, self._schema, self._mode):
-                if keep(row):
-                    yield row
+        arrow_keep = (
+            compile_conjunction_arrow(self._pushed_raw, self._schema)
+            if keep is not None else None
+        )
+        yield from scan_split(
+            (partition.path, partition.start, partition.end,
+             partition.state, partition.depth),
+            self._row_tag, self._schema, self._mode,
+            keep=keep, arrow_keep=arrow_keep,
+        )
+
+
+def scan_split(split: tuple, row_tag: str, schema: StructType, mode: str,
+               keep=None, arrow_keep=None, raw_limit: int | None = None):
+    """Records of one annotated split — the per-task record reader of
+    both the batch and the streaming source. Flat scalar schemas take
+    the fused scan and yield Arrow RecordBatches the DataSource worker
+    ships as-is; other schemas yield ElementTree-assembled tuples (the
+    worker converts per value). ``keep`` is the tri-valued pushed-filter
+    conjunction, ``arrow_keep`` its Arrow twin when every filter has one
+    (pushdown.py); ``raw_limit`` caps the compressed bytes read."""
+    asm = FlatAssembler.try_create(schema, mode)
+    if asm is not None:
+        yield from asm.fused_split_batches(
+            split, row_tag, predicate=keep, arrow_predicate=arrow_keep,
+            raw_limit=raw_limit,
+        )
+        return
+    rows = _read_split(split, row_tag, schema, mode, raw_limit=raw_limit)
+    yield from (rows if keep is None else filter(keep, rows))
 
 
 _REGISTERED_SESSIONS: set[int] = set()

@@ -45,15 +45,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from xml_hive_spark.flat import FlatAssembler, strip_metadata
+from xml_hive_spark.flat import strip_metadata
 from xml_hive_spark.reader import (
     DEFAULT_PARTITION_BYTES,
-    _read_split,
     _reject_utf16,
+    byte_fence,
     chain_splits,
-    iter_split_record_bytes,
 )
-from xml_hive_spark.sources.xml_datasource import _opt
+from xml_hive_spark.sources.xml_datasource import _opt, scan_split
 from xml_hive_spark.xsd import xsd_to_struct
 
 
@@ -64,9 +63,10 @@ class XmlStreamPartition(InputPartition):
     end: int
     state: str = "TEXT"
     depth: int = 0
-    # compressed inputs: cap on COMPRESSED bytes = the size recorded in
-    # the offset, so a member appended after admission is invisible to
-    # this batch and to any checkpoint-recovery replay (0 = no cap)
+    # the size recorded in the offset: caps the COMPRESSED bytes a
+    # .gz/.bz2 read sees, so a member appended after admission is
+    # invisible to this batch and to any checkpoint-recovery replay
+    # (plain files are bounded by their split end; 0 = no cap)
     raw_limit: int = 0
 
 
@@ -195,36 +195,22 @@ class XmlStreamReader(DataSourceStreamReader):
         for p, size in target.items():
             if p in seen or size <= 0 or not os.path.exists(p):
                 continue
-            if p.endswith((".gz", ".bz2")):
-                from xml_hive_spark.reader import GZIP_SPLIT_END
-
-                parts.append(
-                    XmlStreamPartition(p, 0, GZIP_SPLIT_END, "TEXT", 0,
-                                       raw_limit=size)
-                )
-                continue
-            pb = self._partition_bytes
-            n = max(1, (size + pb - 1) // pb)
-            step = (size + n - 1) // n
-            bounds = [min(i * step, size) for i in range(n + 1)]
             # phase A+B boundary reconciliation (driver-side: new files
             # only, one extra byte scan for multi-split files)
-            ann = chain_splits(lambda p=p: open(p, "rb"), bounds, self._row_tag)
-            parts += [XmlStreamPartition(p, a, b, st, d) for a, b, st, d in ann]
+            ann = chain_splits(lambda p=p: open(p, "rb"),
+                               byte_fence(p, size, self._partition_bytes),
+                               self._row_tag)
+            parts += [XmlStreamPartition(p, a, b, st, d, raw_limit=size)
+                      for a, b, st, d in ann]
         return parts
 
     def read(self, partition: XmlStreamPartition):
-        split = (partition.path, partition.start, partition.end,
-                 partition.state, partition.depth)
-        limit = partition.raw_limit or None
-        asm = FlatAssembler.try_create(self._schema, self._mode)
-        if asm is not None:
-            yield from asm.batches(
-                iter_split_record_bytes(split, self._row_tag, raw_limit=limit)
-            )
-        else:
-            yield from _read_split(split, self._row_tag, self._schema,
-                                   self._mode, raw_limit=limit)
+        yield from scan_split(
+            (partition.path, partition.start, partition.end,
+             partition.state, partition.depth),
+            self._row_tag, self._schema, self._mode,
+            raw_limit=partition.raw_limit or None,
+        )
 
     def commit(self, end: dict) -> None:
         self._absorb(end)  # keep the admission floor current (restart case)
